@@ -103,7 +103,9 @@ object GraftExtensions {
   val jaccardSortedDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (FunctionIdentifier("jaccard_sorted"),
       info("jaccard_sorted",
-        "jaccard_sorted(a, b) - exact Jaccard of two sorted-distinct BIGINT arrays"),
+        "jaccard_sorted(a, b) - exact Jaccard of two ascending, duplicate-free BIGINT " +
+          "arrays; unsorted input undercounts the intersection (a wrong result, not an " +
+          "approximation)"),
       arity("jaccard_sorted", 2)(args => graft.functions.JaccardSorted(args(0), args(1))))
 
   val parseTurnDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =

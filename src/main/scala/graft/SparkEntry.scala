@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.datagen.SyntheticTranscripts
 import graft.lexer.PatternBank
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
-import graft.pipeline.{Aggregate, Enrich, Parse, Route}
+import graft.pipeline.{Aggregate, Enrich, Parse, Route, Staging}
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2 inventory), with equivalent DuckDB SQL in `oracleSql`
@@ -69,28 +69,6 @@ object SparkEntry {
       SyntheticTranscripts.dimTool(spark), SyntheticTranscripts.dimRole(spark))
   }
 
-  /** One staged ANN index per (corpus, method): the index is a DATASET
-    * artifact, so s2 and the s4 recall gate (and repeated bench runs in
-    * one JVM) share the same parquet index instead of rebuilding it per
-    * query construction — index once, query many, within the process too.
-    * The key includes the corpus plan's semantic hash AND the session
-    * identity: keying on the sf dir alone would silently serve a stale
-    * index to a caller passing a DIFFERENT embeddings frame for the same
-    * dir (or a frame bound to a new session). Dirs are removed at JVM exit.
-    */
-  private val annIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedIndexDir(method: String, corpus: DataFrame)(build: String => Unit): String = {
-    val key = method + ":" + corpus.queryExecution.analyzed.semanticHash() +
-      ":" + System.identityHashCode(corpus.sparkSession)
-    annIndexCache.computeIfAbsent(key, { _ =>
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-ann-index")
-      val t0 = System.nanoTime()
-      build(d)
-      System.err.println(f"[graft-stage] index $method%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      d
-    })
-  }
-
   /** Mean pair recall of a near-dup dedup path against the exact
     * char-5-shingle Jaccard truth set (the similarity MinHash approximates;
     * source-blocked so DuckDB can recompute it), reported as a driver-
@@ -122,17 +100,6 @@ object SparkEntry {
       .agg(coalesce(max(col("n")), lit(0L)).as("mx"))
       .select((col("mx") > Dedup.TruthMaxBlock).as("truth_capped"))
 
-  /** Staged-query memo for the d3/d4 eager-staging builders: one staged
-    * frame per (query, sfDir, session). Without it, every invocation of the
-    * query builder allocated a fresh temp dir and ran the staging write job
-    * again — disk and work growing per call in a looping process.
-    */
-  private val stagedQueryCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def cachedStagedQuery(name: String, spark: SparkSession, sfDir: String)
-                               (build: => DataFrame): DataFrame =
-    stagedQueryCache.computeIfAbsent(
-      s"$name:$sfDir:${System.identityHashCode(spark)}", _ => build)
-
   /** Staged-parquet memo of a BOUNDED intermediate shared by several driver
     * rows (truth pair sets, brute-force top-k truth, shipped pair outputs):
     * built once per (name, sf dir, session), written to a JVM-exit-scoped
@@ -147,25 +114,11 @@ object SparkEntry {
     */
   private def stagedShared(name: String, s: SparkSession, dir: String)
                           (build: => DataFrame): DataFrame =
-    cachedStagedQuery(name, s, dir) {
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit(s"graft-$name")
-      val t0 = System.nanoTime()
+    Staging.artifact(s, s"$name:$dir") {
+      val d = Staging.tempDirDeletedOnExit(s"graft-$name")
       build.write.mode("overwrite").parquet(s"$d/out")
-      System.err.println(f"[graft-stage] shared $name%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
       s.read.parquet(s"$d/out")
     }
-
-  /** In-process memo for the tiny trained ANN models (centroid sets): s3/s6
-    * train the SAME flat 16-cell model and s9/s10 the SAME two-level model —
-    * the training passes over the corpus are deterministic pure functions of
-    * (corpus, params), so the second trainer run per process is pure waste.
-    * Keyed like [[annIndexCache]] (semantic hash + session identity).
-    */
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def cachedModel[T <: AnyRef](method: String, corpus: DataFrame)(train: => T): T =
-    modelCache.computeIfAbsent(
-      method + ":" + corpus.queryExecution.analyzed.semanticHash() +
-        ":" + System.identityHashCode(corpus.sparkSession), _ => train).asInstanceOf[T]
 
   /** The ANN gates' shared query batch: the 10 lowest-id vectors. */
   private def q10(emb: DataFrame): DataFrame = emb.filter(col("vec_id") < 10)
@@ -181,12 +134,6 @@ object SparkEntry {
       Similarity.bruteForceKnn(emb, q10(emb), k = 5).select("query_id", "neighbor_id")
     }
 
-  /** l1 fixture: a deterministic synthetic hive-style .log file
-    * (LogSplitBench.writeLog content — multi-line events, ERROR lines)
-    * sized per sf dir, generated once into /tmp via an atomic move so
-    * concurrent processes can share it. Both the l1 query (split path) and
-    * Verify's oracle staging (wholetext path) parse THIS file.
-    */
   /** Scale factor parsed from the sf path segment (".../sf0.01" → 0.01;
     * last segment wins if several). Substring checks like
     * `dir.contains("0.1")` silently mis-sized on any path with those digits
@@ -206,15 +153,22 @@ object SparkEntry {
     case _ => 500L
   }
 
-  private val l1Gen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  /** l1 fixture: a deterministic synthetic hive-style .log file
+    * (LogSplitBench.writeLog content — multi-line events, ERROR lines)
+    * sized per sf dir, generated once into /tmp via an atomic move so
+    * concurrent processes can share it; the file is its own memo, and the
+    * monitor keeps two threads of one process from writing it twice. Both
+    * the l1 query (split path) and Verify's oracle staging (wholetext path)
+    * parse THIS file.
+    */
   private[graft] def l1LogPath(dir: String): String = {
     val mb = sfOfDir(dir) match {
       case Some(sf) if sf >= 0.1 => 16
       case Some(sf) if sf >= 0.01 => 4
       case _ => 1
     }
-    l1Gen.computeIfAbsent(mb, { _ =>
-      val p = java.nio.file.Paths.get(s"/tmp/graft-l1-$mb.log")
+    val p = java.nio.file.Paths.get(s"/tmp/graft-l1-$mb.log")
+    synchronized {
       if (!java.nio.file.Files.exists(p)) {
         val tmp = java.nio.file.Paths.get(
           s"/tmp/graft-l1-$mb.log.tmp-${ProcessHandle.current().pid()}")
@@ -222,8 +176,8 @@ object SparkEntry {
         java.nio.file.Files.move(tmp, p,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-      p.toString
-    })
+    }
+    p.toString
   }
 
   /** The SHIPPED staged minhash/simhash pair plans — shared by the d3/d4
@@ -237,13 +191,13 @@ object SparkEntry {
   private def d3Pairs(s: SparkSession, dir: String): DataFrame =
     stagedShared("d3-pairs", s, dir) {
       Dedup.minhashPairs(docsWithDups(s, dir), threshold = 0.8,
-        stagingDir = Some(graft.pipeline.Staging.tempDirDeletedOnExit("graft-d3-stage")))
+        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d3-stage")))
     }
 
   private def d4Pairs(s: SparkSession, dir: String): DataFrame =
     stagedShared("d4-pairs", s, dir) {
       Dedup.simhashPairs(docsWithDups(s, dir), maxHamming = 3,
-        stagingDir = Some(graft.pipeline.Staging.tempDirDeletedOnExit("graft-d4-stage")))
+        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d4-stage")))
     }
 
   /** The d5/d8 shared n-gram Jaccard pair set: d8 clusters exactly the d5
@@ -260,12 +214,14 @@ object SparkEntry {
     * instead of re-deriving it per query (measured ~5 s each at sf0.1).
     */
   private def truthPairs(s: SparkSession, dir: String): DataFrame =
-    cachedStagedQuery("truth", s, dir) {
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-truth")
+    stagedShared("truth", s, dir) {
       Dedup.shingleJaccardPairs(docsWithDups(s, dir)).select("id_a", "id_b")
-        .write.mode("overwrite").parquet(s"$d/truth")
-      s.read.parquet(s"$d/truth")
     }
+
+  // ANN indexes and trained models are dataset artifacts: each is built once
+  // per (corpus plan, session) by Staging.corpusDir / corpusArtifact, so s2
+  // and its s4 gate share one index, s3 and s6 one 16-cell model, s9 and s10
+  // one two-level model — index once, query many, within the process too.
 
   /** The single staged copy of the bucketed vector table — the re-rank
     * side every ANN method shares. One corpus, ONE staged copy: the LSH,
@@ -273,7 +229,7 @@ object SparkEntry {
     * copy (3 corpus passes + 3 × 64-partition writes for one artifact).
     */
   private def vectorsDir(emb: DataFrame): String =
-    cachedIndexDir("vectors", emb) { d =>
+    Staging.corpusDir("vectors", emb) { d =>
       Similarity.vectorTableBucketed(emb).write.partitionBy("id_bucket").parquet(s"$d/vectors")
     }
 
@@ -286,7 +242,7 @@ object SparkEntry {
     * vectors ([[vectorsDir]]), instead of nTables embedded copies.
     */
   private def stagedLshKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = cachedIndexDir("lsh", emb) { d =>
+    val dir = Staging.corpusDir("lsh", emb) { d =>
       Similarity.lshIndex(emb, nBits = 4).write.parquet(s"$d/lsh")
     }
     val spark = emb.sparkSession
@@ -316,7 +272,7 @@ object SparkEntry {
     */
   private def ivfStagedDir(method: String, emb: DataFrame)
                           (train: DataFrame => Array[Array[Float]]): String =
-    cachedIndexDir(method, emb) { d =>
+    Staging.corpusDir(method, emb) { d =>
       val cs = train(emb)
       Similarity.ivfIndex(emb, cs).write.partitionBy("cell").parquet(s"$d/ivf")
       Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
@@ -330,7 +286,8 @@ object SparkEntry {
 
   private def ivfDir(emb: DataFrame): String =
     // model memoized: s6's IVF-PQ builder needs the SAME 16-cell centroids
-    ivfStagedDir("ivf", emb)(e => cachedModel("ivftrain16", e)(Similarity.ivfTrain(e, nCells = 16)))
+    ivfStagedDir("ivf", emb)(e =>
+      Staging.corpusArtifact("ivftrain16", e)(Similarity.ivfTrain(e, nCells = 16)))
 
   private def stagedIvfKnn(emb: DataFrame, q: DataFrame): DataFrame =
     stagedIvfFrom(ivfDir(emb), emb.sparkSession, q)
@@ -367,10 +324,11 @@ object SparkEntry {
     * same params); the second distributed-Lloyd run per process was waste.
     */
   private def twoLevelModel(emb: DataFrame): Similarity.IvfTwoLevel =
-    cachedModel("ivf2ltrain-16-4", emb)(Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4))
+    Staging.corpusArtifact("ivf2ltrain-16-4", emb)(
+      Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4))
 
   private def ivf2lDir(emb: DataFrame): String =
-    cachedIndexDir("ivf2l", emb) { d =>
+    Staging.corpusDir("ivf2l", emb) { d =>
       val m = twoLevelModel(emb)
       Similarity.ivfIndexTwoLevel(emb, m).write.partitionBy("super").parquet(s"$d/ivf")
       Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
@@ -415,7 +373,7 @@ object SparkEntry {
     * retrain, no rebuild; readers see the union via partition pruning.
     */
   private def ivf2lAppendDir(emb: DataFrame): String =
-    cachedIndexDir("ivf2l-append", emb) { d =>
+    Staging.corpusDir("ivf2l-append", emb) { d =>
       val base = emb.filter(col("vec_id") % 10 =!= 0)
       val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)
       Similarity.ivfIndexTwoLevel(base, m).write.partitionBy("super").parquet(s"$d/ivf")
@@ -473,7 +431,7 @@ object SparkEntry {
     * operating point as s7 (nSub=16, rerank=40) plus s9's routing.
     */
   private def ivfPq2lDir(emb: DataFrame): String =
-    cachedIndexDir("ivfpq2l", emb) { d =>
+    Staging.corpusDir("ivfpq2l", emb) { d =>
       val m = twoLevelModel(emb) // memoized — identical to s9's model
       val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 16, k = 16)
       Similarity.ivfPqIndexTwoLevel(emb, m, pq).write.partitionBy("super").parquet(s"$d/ivfpq")
@@ -535,8 +493,8 @@ object SparkEntry {
     * actually serves batches from.
     */
   private def ivfPqDir(emb: DataFrame): String =
-    cachedIndexDir("ivfpq", emb) { d =>
-      val cs = cachedModel("ivftrain16", emb)(Similarity.ivfTrain(emb, nCells = 16))
+    Staging.corpusDir("ivfpq", emb) { d =>
+      val cs = Staging.corpusArtifact("ivftrain16", emb)(Similarity.ivfTrain(emb, nCells = 16))
       val pq = Similarity.pqTrain(emb, cs, nSub = 16, k = 16)
       Similarity.ivfPqIndex(emb, cs, pq).write.partitionBy("cell").parquet(s"$d/ivfpq")
       Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
@@ -730,7 +688,10 @@ object SparkEntry {
         .withColumn("prev_ts", lag("ts", 1).over(byUser))
         .withColumn("is_new",
           when(col("prev_ts").isNull ||
-            (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > 1800, 1L).otherwise(0L))
+            // an exact day-time interval, like the oracle's epoch()
+            // difference: unix_timestamp truncates to whole seconds, so a
+            // 1800.5 s gap read as 1800
+            (col("ts") - col("prev_ts")) > expr("INTERVAL '1800' SECOND"), 1L).otherwise(0L))
         .withColumn("session_id", sum("is_new").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .groupBy("user_id", "session_id").agg(count(lit(1)).as("session_len"))
         .groupBy("user_id")
@@ -798,7 +759,7 @@ object SparkEntry {
     // sized so ε·N sits far below the heavy hitters' counts (the standard
     // CMS sizing rule); seed fixed for determinism.
     "q21_heavy_hitters" -> ((s, dir) =>
-      cachedStagedQuery("q21", s, dir) {
+      Staging.artifact(s, s"q21:$dir") {
         val ev = tbl(s, dir, "events")
         val top = ev.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
           .orderBy(col("n_exact").desc, col("user_id")).limit(10)
@@ -1013,10 +974,10 @@ object SparkEntry {
     // same file — split-path ≡ whole-path including global event indices,
     // line numbers and exact text bytes (crc).
     "l1_log_events" -> ((s, dir) =>
-      cachedStagedQuery("l1", s, dir) {
+      Staging.artifact(s, s"l1:$dir") {
         import s.implicits._
         val bank = graft.pipeline.Parse.broadcastBank(s, PatternBank.example)
-        val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-l1-index")
+        val d = Staging.tempDirDeletedOnExit("graft-l1-index")
         graft.sources.LogFiles.chunkIndex(s, l1LogPath(dir), bank, chunkBytes = 256L << 10)
           .write.mode("overwrite").parquet(s"$d/chunks")
         val idx = s.read.parquet(s"$d/chunks").as[graft.sources.LogFiles.ChunkMeta]

@@ -36,6 +36,18 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(j - 0.5) < 1e-15)
   }
 
+  test("jaccard_sorted and cosine_similarity check input types at analysis") {
+    // an INT array is cast to BIGINT, not read as packed longs
+    val j = spark.sql("SELECT jaccard_sorted(array(1, 2, 3), array(2, 3)) AS j")
+      .first().getDouble(0)
+    assert(j == 2.0 / 3)
+    for (q <- Seq("SELECT jaccard_sorted(array('a', 'b'), array('b'))",
+                  "SELECT cosine_similarity(array('a'), array('b'))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+  }
+
   test("parse_turn works from SQL and extracts routing fields") {
     import spark.implicits._
     Seq(("c1", 0, "assistant", null: String,

@@ -19,11 +19,13 @@ class TokenizerSpec extends AnyFunSuite {
   private val VarThread = 4
   private val VarPath = 5
 
-  private lazy val hiveLog: String = {
-    val in = getClass.getResourceAsStream("/hive-24h.log")
+  private def resourceText(name: String): String = {
+    val in = getClass.getResourceAsStream(name)
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
   }
+
+  private lazy val hiveLog: String = resourceText("/hive-24h.log")
 
   test("schema fixture loads: 5 ts schemas, 6 var schemas in order, delimiters") {
     val cfg = SchemaConfig.example
@@ -185,11 +187,7 @@ class TokenizerSpec extends AnyFunSuite {
     assert(ts.map(_.value).mkString == "a::b,,c\n")
   }
 
-  private lazy val hiveLargeLog: String = {
-    val in = getClass.getResourceAsStream("/hive-24h_large.log")
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
+  private lazy val hiveLargeLog: String = resourceText("/hive-24h_large.log")
 
   test("losslessness + event assembly on the 103-line hive-24h_large fixture (lexer_test.rs:9-65)") {
     val ts = Tokenizer.tokenize(bank, hiveLargeLog)
@@ -209,10 +207,7 @@ class TokenizerSpec extends AnyFunSuite {
   }
 
   test("the reference's real schema.yaml loads byte-for-byte; field_identifier drives tool routing") {
-    val yaml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/root/reference/examples/schema.yaml")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val cfg = SchemaConfig.parseYaml(yaml)
+    val cfg = SchemaConfig.parseYaml(resourceText("/schema.yaml"))
     assert(cfg.varNames == Vector("int", "float", "hex", "loglevel", "field_identifier", "path"))
     val refBank = PatternBank.compile(cfg)
     // routing resolves the bracket variable under its real-YAML name
