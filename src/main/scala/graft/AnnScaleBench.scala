@@ -141,20 +141,20 @@ object AnnScaleBench {
       val stagePq = graft.pipeline.Staging.tempDir("graft-pq-index")
       try {
         val t0 = System.nanoTime()
-        val csU = Similarity.ivfTrain(embFine, nCells = 64)
-        val pq = Similarity.pqTrain(embFine, csU, nSub = 8, k = 256, sampleSize = 2048)
-        Similarity.ivfPqIndex(embFine, csU, pq).write.partitionBy("cell").parquet(s"$stagePq/ivfpq")
-        Similarity.ivfIndex(embFine, csU).write.partitionBy("cell").parquet(s"$stagePq/ivf")
+        val mU = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(embFine, nCells = 64))
+        val pq = Similarity.pqTrainTwoLevel(embFine, mU, nSub = 8, k = 256, sampleSize = 2048)
+        Similarity.ivfPqIndexTwoLevel(embFine, mU, pq).write.partitionBy("cell").parquet(s"$stagePq/ivfpq")
+        Similarity.ivfIndexTwoLevel(embFine, mU).write.partitionBy("cell").parquet(s"$stagePq/ivf")
         println(f"[ann-scale] ivfpq-index-build wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
           f"pqIndex=${dirBytes(s"$stagePq/ivfpq") / 1e6}%.1fMB " +
           f"rawIvfIndex=${dirBytes(s"$stagePq/ivf") / 1e6}%.1fMB")
-        val pqStaged = run("ivfpq-query-staged")(Similarity.ivfPqKnnIndexed(
-          spark.read.parquet(s"$stagePq/ivfpq"), csU, pq,
-          Similarity.vectorTable(embFine), qFine, k = 10, nProbe = 8, rerank = 8))
+        val pqStaged = run("ivfpq-query-staged")(Similarity.ivfPqKnnTwoLevelIndexed(
+          spark.read.parquet(s"$stagePq/ivfpq"), mU, pq,
+          Similarity.vectorTable(embFine), qFine, k = 10, nProbe = 8, nProbeSuper = 1, rerank = 8))
         val recallPq = pqStaged.intersect(bruteFine).size.toDouble / bruteFine.size
         println(f"[ann-scale] ivfpq recall@10=$recallPq%.3f (fine-grained corpus)")
-        val rawStaged = run("ivf-query-staged")(Similarity.ivfKnnIndexed(
-          spark.read.parquet(s"$stagePq/ivf"), csU, qFine, k = 10, nProbe = 8))
+        val rawStaged = run("ivf-query-staged")(Similarity.ivfKnnTwoLevelIndexed(
+          spark.read.parquet(s"$stagePq/ivf"), mU, qFine, k = 10, nProbe = 8, nProbeSuper = 1))
         val recallRaw = rawStaged.intersect(bruteFine).size.toDouble / bruteFine.size
         println(f"[ann-scale] ivf-raw recall@10=$recallRaw%.3f (fine-grained corpus)")
 
@@ -173,11 +173,12 @@ object AnnScaleBench {
         println(f"[ann-scale] ivf-dist-train nCells=4096 iters=3 frac=0.25 " +
           f"wall=${(System.nanoTime() - tTrain) / 1e9}%.1fs driverModel=$modelMb%.1fMB")
         val tIdx = System.nanoTime()
-        val idx4k = Similarity.ivfIndex(embFine, cs4k).persist()
+        val m4k = Similarity.IvfTwoLevel.flat(cs4k)
+        val idx4k = Similarity.ivfIndexTwoLevel(embFine, m4k).persist()
         idx4k.count()
         println(f"[ann-scale] ivf-dist-index-build wall=${(System.nanoTime() - tIdx) / 1e9}%.1fs")
         val dist = run("ivf-dist-4096c")(
-          Similarity.ivfKnnIndexed(idx4k, cs4k, qFine, k = 10, nProbe = 512))
+          Similarity.ivfKnnTwoLevelIndexed(idx4k, m4k, qFine, k = 10, nProbe = 512, nProbeSuper = 1))
         val recallDist = dist.intersect(bruteFine).size.toDouble / bruteFine.size
         idx4k.unpersist()
         println(f"[ann-scale] ivf-dist recall@10=$recallDist%.3f vs 64-cell $recallRaw%.3f " +
@@ -297,9 +298,9 @@ object AnnScaleBench {
       val qCorr = embCorr.filter(col("vec_id") % (nCorr / nQueries) === 0)
       val bruteCorr = run("brute-correlated")(Similarity.bruteForceKnn(embCorr, qCorr, k = 10))
       def ivfRecall(label: String, trainFrame: DataFrame): Double = {
-        val cs = Similarity.ivfTrain(trainFrame, nCells = 16)
-        val got = run(s"ivf-$label")(Similarity.ivfKnnIndexed(
-          Similarity.ivfIndex(embCorr, cs), cs, qCorr, k = 10, nProbe = 4))
+        val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(trainFrame, nCells = 16))
+        val got = run(s"ivf-$label")(Similarity.ivfKnnTwoLevelIndexed(
+          Similarity.ivfIndexTwoLevel(embCorr, m), m, qCorr, k = 10, nProbe = 4, nProbeSuper = 1))
         val r = got.intersect(bruteCorr).size.toDouble / bruteCorr.size
         println(f"[ann-scale] ivf-$label recall@10=$r%.3f (correlated ids, n=$nCorr)")
         r

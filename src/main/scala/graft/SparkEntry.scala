@@ -262,53 +262,73 @@ object SparkEntry {
       run(emb, q10(emb))
     }
 
-  /** IVF kNN through a parquet-staged index + centroid model (shared per
-    * corpus like the LSH index). ONE staging recipe parameterized by the
-    * trainer: s3 (driver Lloyd) and s8 (executor-side Lloyd) must stay the
-    * SAME staged contract — index partitioned on cell (the probe join's
-    * broadcast side dynamically prunes the scan to the nProbe cells
-    * actually probed), centroid model beside it, k=5/nProbe=6 — or the
-    * s3-vs-s8 comparison stops meaning "same index, different trainer".
+  /** ONE IVF staging recipe for every IVF row, parameterized by the trainer
+    * and the index's partition column: an index built through the trainer's
+    * model plus the parquet model beside it (shared per corpus like the LSH
+    * index). s3/s5 (driver Lloyd) and s8 (executor-side Lloyd) stage a flat
+    * model partitioned on cell — the probe join's broadcast side
+    * dynamically prunes the scan to the nProbe cells actually probed — and
+    * s9/s12 the two-level model partitioned on super. Every row queries at
+    * k=5/nProbe=6 ([[stagedIvfKnnFrom]]), so the s3-vs-s8 comparison keeps
+    * meaning "same index, different trainer".
     */
-  private def ivfStagedDir(method: String, emb: DataFrame)
-                          (train: DataFrame => Array[Array[Float]]): String =
-    Staging.corpusDir(method, emb) { d =>
-      val cs = train(emb)
-      Similarity.ivfIndex(emb, cs).write.partitionBy("cell").parquet(s"$d/ivf")
-      Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
+  private def ivfDir(name: String, emb: DataFrame, partitionCol: String)
+                    (train: DataFrame => Similarity.IvfTwoLevel): String =
+    Staging.corpusDir(name, emb) { d =>
+      val m = train(emb)
+      Similarity.ivfIndexTwoLevel(emb, m).write.partitionBy(partitionCol).parquet(s"$d/ivf")
+      Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
     }
 
-  private def stagedIvfFrom(dir: String, spark: SparkSession, q: DataFrame): DataFrame =
-    Similarity.ivfKnnIndexed(
-      spark.read.parquet(s"$dir/ivf"),
-      Similarity.centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      q, k = 5, nProbe = 6)
+  private def stagedModel(spark: SparkSession, dir: String): Similarity.IvfTwoLevel =
+    Similarity.twoLevelFromDf(spark.read.parquet(s"$dir/model"))
 
-  private def ivfDir(emb: DataFrame): String =
-    // model memoized: s6's IVF-PQ builder needs the SAME 16-cell centroids
-    ivfStagedDir("ivf", emb)(e =>
-      Staging.corpusArtifact("ivftrain16", e)(Similarity.ivfTrain(e, nCells = 16)))
+  private def stagedIvfKnnFrom(dir: String, emb: DataFrame, q: DataFrame, nProbeSuper: Int,
+                               allowed: Option[DataFrame] = None): DataFrame = {
+    val spark = emb.sparkSession
+    Similarity.ivfKnnTwoLevelFilteredIndexed(spark.read.parquet(s"$dir/ivf"),
+      stagedModel(spark, dir), q, allowed, k = 5, nProbe = 6, nProbeSuper = nProbeSuper)
+  }
+
+  /** The flat 16-cell driver-Lloyd model — memoized: s3's index builder and
+    * s6's IVF-PQ builder need the SAME centroids.
+    */
+  private def flatModel(emb: DataFrame): Similarity.IvfTwoLevel =
+    Similarity.IvfTwoLevel.flat(
+      Staging.corpusArtifact("ivftrain16", emb)(Similarity.ivfTrain(emb, nCells = 16)))
+
+  private def flatIvfDir(emb: DataFrame): String = ivfDir("ivf", emb, "cell")(flatModel)
 
   private def stagedIvfKnn(emb: DataFrame, q: DataFrame): DataFrame =
-    stagedIvfFrom(ivfDir(emb), emb.sparkSession, q)
+    stagedIvfKnnFrom(flatIvfDir(emb), emb, q, nProbeSuper = 1)
 
-  /** The centroid model of the staged IVF index the s3/s5 queries run
-    * against — Verify's sequential replay oracle scores candidates with the
-    * SAME model (the model is a dataset artifact; the replay pins the
+  /** The model of the staged IVF index the s3/s5 queries run against —
+    * Verify's sequential replay oracle scores candidates with the SAME
+    * model (the model is a dataset artifact; the replay pins the
     * distributed index build + probe + re-rank machinery around it).
     */
-  private[graft] def ivfModel(s: SparkSession, dir: String): Array[Array[Float]] =
-    Similarity.centroidsFromDf(
-      s.read.parquet(s"${ivfDir(tbl(s, dir, "embeddings"))}/centroids"))
+  private[graft] def ivfModel(s: SparkSession, dir: String): Similarity.IvfTwoLevel =
+    stagedModel(s, flatIvfDir(tbl(s, dir, "embeddings")))
 
   /** IVF through the EXECUTOR-SIDE trainer (full-population distributed
     * Lloyd) — the s8 gate puts the scale trainer on the driver correctness
     * signal with the same staged contract as s3/s5 (shared recipe above).
     */
   private def stagedIvfDistKnn(emb: DataFrame, q: DataFrame): DataFrame =
-    stagedIvfFrom(
-      ivfStagedDir("ivfdist", emb)(Similarity.ivfTrainDistributed(_, nCells = 16)),
-      emb.sparkSession, q)
+    stagedIvfKnnFrom(
+      ivfDir("ivfdist", emb, "cell")(e =>
+        Similarity.IvfTwoLevel.flat(Similarity.ivfTrainDistributed(e, nCells = 16))),
+      emb, q, nProbeSuper = 1)
+
+  /** The two-level model on the full corpus — memoized: s9's index builder
+    * and s10's IVF-PQ composition train the IDENTICAL model (same corpus,
+    * same params); the second distributed-Lloyd run per process was waste.
+    */
+  private def twoLevelModel(emb: DataFrame): Similarity.IvfTwoLevel =
+    Staging.corpusArtifact("ivf2ltrain-16-4", emb)(
+      Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4))
+
+  private def ivf2lDir(emb: DataFrame): String = ivfDir("ivf2l", emb, "super")(twoLevelModel)
 
   /** TWO-LEVEL IVF through its staged contract (super-partitioned index +
     * parquet model) — the s9 gate drives the hierarchical router end to
@@ -319,35 +339,14 @@ object SparkEntry {
     * clusters, nSuper ≫ probed supers) is measured in AnnScaleBench at
     * 65,536 cells.
     */
-  /** The two-level model on the full corpus — memoized: s9's index builder
-    * and s10's IVF-PQ composition train the IDENTICAL model (same corpus,
-    * same params); the second distributed-Lloyd run per process was waste.
-    */
-  private def twoLevelModel(emb: DataFrame): Similarity.IvfTwoLevel =
-    Staging.corpusArtifact("ivf2ltrain-16-4", emb)(
-      Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4))
-
-  private def ivf2lDir(emb: DataFrame): String =
-    Staging.corpusDir("ivf2l", emb) { d =>
-      val m = twoLevelModel(emb)
-      Similarity.ivfIndexTwoLevel(emb, m).write.partitionBy("super").parquet(s"$d/ivf")
-      Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
-    }
-
-  private def stagedIvfTwoLevelKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lDir(emb)
-    Similarity.ivfKnnTwoLevelIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, k = 5, nProbe = 6, nProbeSuper = 3)
-  }
+  private def stagedIvfTwoLevelKnn(emb: DataFrame, q: DataFrame): DataFrame =
+    stagedIvfKnnFrom(ivf2lDir(emb), emb, q, nProbeSuper = 3)
 
   /** The two-level model of the staged s9 index — the s12 replay oracle
     * routes with the SAME model (same contract as [[ivfModel]]).
     */
   private[graft] def ivfTwoLevelModel(s: SparkSession, dir: String): Similarity.IvfTwoLevel =
-    Similarity.twoLevelFromDf(
-      s.read.parquet(s"${ivf2lDir(tbl(s, dir, "embeddings"))}/model"))
+    stagedModel(s, ivf2lDir(tbl(s, dir, "embeddings")))
 
   /** FILTERED ANN through s9's staged two-level index: the metadata
     * predicate (label < 5 — the attribute is read from the corpus table
@@ -357,14 +356,9 @@ object SparkEntry {
     * PushedFilters) lands as a left-semi join on the candidate stream
     * before any cosine is evaluated. Same operating point as s9.
     */
-  private def stagedIvfTwoLevelFilteredKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lDir(emb)
-    val allowed = emb.filter(col("label") < 5).select(col("vec_id").as("id"))
-    Similarity.ivfKnnTwoLevelFilteredIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, Some(allowed), k = 5, nProbe = 6, nProbeSuper = 3)
-  }
+  private def stagedIvfTwoLevelFilteredKnn(emb: DataFrame, q: DataFrame): DataFrame =
+    stagedIvfKnnFrom(ivf2lDir(emb), emb, q, nProbeSuper = 3,
+      Some(emb.filter(col("label") < 5).select(col("vec_id").as("id"))))
 
   /** INCREMENTAL APPEND lifecycle (s11): the index a daily-growing corpus
     * actually runs — train/build on the BASE 90% (vec_id % 10 != 0), then
@@ -378,18 +372,13 @@ object SparkEntry {
       val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)
       Similarity.ivfIndexTwoLevel(base, m).write.partitionBy("super").parquet(s"$d/ivf")
       Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
-      val mFrozen = Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$d/model"))
+      val mFrozen = stagedModel(emb.sparkSession, d)
       Similarity.ivfIndexTwoLevel(emb.filter(col("vec_id") % 10 === 0), mFrozen)
         .write.mode("append").partitionBy("super").parquet(s"$d/ivf")
     }
 
-  private def stagedIvfTwoLevelAppendKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lAppendDir(emb)
-    Similarity.ivfKnnTwoLevelIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, k = 5, nProbe = 6, nProbeSuper = 3)
-  }
+  private def stagedIvfTwoLevelAppendKnn(emb: DataFrame, q: DataFrame): DataFrame =
+    stagedIvfKnnFrom(ivf2lAppendDir(emb), emb, q, nProbeSuper = 3)
 
   /** s11 gate row: (n_queries, recall_pass, staleness_pass). recall_pass =
     * the appended index still clears the s9 recall bar on the GROWN corpus
@@ -425,31 +414,60 @@ object SparkEntry {
           .as("staleness_pass"))
   }
 
-  /** The COMPOSED scale layout — two-level router over PQ codes — through
-    * its staged contract: super-partitioned compressed index, parquet
-    * model + codebooks, bucketed vector table for the exact re-rank. Same
-    * operating point as s7 (nSub=16, rerank=40) plus s9's routing.
+  /** IVF-PQ kNN through a parquet-staged compressed index: coarse model +
+    * per-subspace codebooks + (super, cell, id, codes, norm) rows + the
+    * single-copy vector table for the exact re-rank. ONE recipe like
+    * [[ivfDir]]: s6/s7 stage the flat 16-cell model partitioned on cell (the
+    * probe join dynamically prunes the scan to the probed cells), s10/s13
+    * the two-level model partitioned on super — the COMPOSED scale layout,
+    * router over PQ codes. The scan side of a query batch reads nSub+4 =
+    * 20 B/vector at this builder's nSub=16 (vs 260 B raw) — the layout a
+    * 100 TB vector corpus actually serves batches from.
     */
-  private def ivfPq2lDir(emb: DataFrame): String =
-    Staging.corpusDir("ivfpq2l", emb) { d =>
-      val m = twoLevelModel(emb) // memoized — identical to s9's model
+  private def ivfPqDir(name: String, emb: DataFrame, partitionCol: String)
+                      (train: DataFrame => Similarity.IvfTwoLevel): String =
+    Staging.corpusDir(name, emb) { d =>
+      val m = train(emb)
       val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 16, k = 16)
-      Similarity.ivfPqIndexTwoLevel(emb, m, pq).write.partitionBy("super").parquet(s"$d/ivfpq")
+      Similarity.ivfPqIndexTwoLevel(emb, m, pq).write.partitionBy(partitionCol).parquet(s"$d/ivfpq")
       Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
       Similarity.pqModelToDf(emb.sparkSession, pq).write.parquet(s"$d/pqmodel")
     }
 
-  private def stagedIvfPqTwoLevelKnn(emb: DataFrame, q: DataFrame,
-                                     allowed: Option[DataFrame] = None): DataFrame = {
-    val dir = ivfPq2lDir(emb)
+  private def stagedIvfPqKnnFrom(dir: String, emb: DataFrame, q: DataFrame, nProbeSuper: Int,
+                                 allowed: Option[DataFrame] = None): DataFrame = {
     val spark = emb.sparkSession
     Similarity.ivfPqKnnTwoLevelFilteredIndexed(
       spark.read.parquet(s"$dir/ivfpq"),
-      Similarity.twoLevelFromDf(spark.read.parquet(s"$dir/model")),
+      stagedModel(spark, dir),
       Similarity.pqModelFromDf(spark.read.parquet(s"$dir/pqmodel")),
       stagedVectors(emb),
-      q, allowed, k = 5, nProbe = 6, nProbeSuper = 3, rerank = 40)
+      // nSub=16 / rerank=40: the validation corpus is near-random vectors
+      // (weak neighbor structure), so ADC needs fine subspaces and a wide
+      // cut to reach the cell-miss-bounded ~0.72 recall raw IVF gets at the
+      // same nProbe (measured at sf0.01 AND sf0.1); 200 exact re-ranks per
+      // query is still negligible vs any corpus scan
+      q, allowed, k = 5, nProbe = 6, nProbeSuper = nProbeSuper, rerank = 40)
   }
+
+  private def flatIvfPqDir(emb: DataFrame): String = ivfPqDir("ivfpq", emb, "cell")(flatModel)
+
+  private def stagedIvfPqKnn(emb: DataFrame, q: DataFrame): DataFrame =
+    stagedIvfPqKnnFrom(flatIvfPqDir(emb), emb, q, nProbeSuper = 1)
+
+  /** Coarse + PQ models of the staged IVF-PQ index s6/s7 query — same
+    * replay-oracle contract as [[ivfModel]].
+    */
+  private[graft] def ivfPqModel(s: SparkSession, dir: String)
+      : (Similarity.IvfTwoLevel, Similarity.PqModel) = {
+    val d = flatIvfPqDir(tbl(s, dir, "embeddings"))
+    (stagedModel(s, d), Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")))
+  }
+
+  private def stagedIvfPqTwoLevelKnn(emb: DataFrame, q: DataFrame,
+                                     allowed: Option[DataFrame] = None): DataFrame =
+    stagedIvfPqKnnFrom(ivfPqDir("ivfpq2l", emb, "super")(twoLevelModel), emb, q,
+      nProbeSuper = 3, allowed)
 
   /** s13 gate row: filtered ANN on the COMPRESSED serving path —
     * (n_queries, recall_pass, no_leak). Truth = exact brute force over the
@@ -482,49 +500,6 @@ object SparkEntry {
           .otherwise(col("hits").cast("double") / col("total") >= minRecall)
           .as("recall_pass"),
         (col("leaks") === 0L).as("no_leak"))
-  }
-
-  /** IVF-PQ kNN through a parquet-staged compressed index: coarse centroids
-    * + per-subspace codebooks + (cell, id, codes, norm) rows + the
-    * single-copy vector table for the exact re-rank. The scan side of a
-    * query batch reads nSub+4 = 20 B/vector at this builder's nSub=16
-    * (vs 260 B raw), cell-partitioned so the probe join dynamically prunes
-    * the scan to the probed cells — the layout a 100 TB vector corpus
-    * actually serves batches from.
-    */
-  private def ivfPqDir(emb: DataFrame): String =
-    Staging.corpusDir("ivfpq", emb) { d =>
-      val cs = Staging.corpusArtifact("ivftrain16", emb)(Similarity.ivfTrain(emb, nCells = 16))
-      val pq = Similarity.pqTrain(emb, cs, nSub = 16, k = 16)
-      Similarity.ivfPqIndex(emb, cs, pq).write.partitionBy("cell").parquet(s"$d/ivfpq")
-      Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
-      Similarity.pqModelToDf(emb.sparkSession, pq).write.parquet(s"$d/pqmodel")
-    }
-
-  /** Coarse + PQ models of the staged IVF-PQ index s6/s7 query — same
-    * replay-oracle contract as [[ivfModel]].
-    */
-  private[graft] def ivfPqModel(s: SparkSession, dir: String)
-      : (Array[Array[Float]], Similarity.PqModel) = {
-    val d = ivfPqDir(tbl(s, dir, "embeddings"))
-    (Similarity.centroidsFromDf(s.read.parquet(s"$d/centroids")),
-      Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")))
-  }
-
-  private def stagedIvfPqKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivfPqDir(emb)
-    val spark = emb.sparkSession
-    Similarity.ivfPqKnnIndexed(
-      spark.read.parquet(s"$dir/ivfpq"),
-      Similarity.centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      Similarity.pqModelFromDf(spark.read.parquet(s"$dir/pqmodel")),
-      stagedVectors(emb),
-      // nSub=16 / rerank=40: the validation corpus is near-random vectors
-      // (weak neighbor structure), so ADC needs fine subspaces and a wide
-      // cut to reach the cell-miss-bounded ~0.72 recall raw IVF gets at the
-      // same nProbe (measured at sf0.01 AND sf0.1); 200 exact re-ranks per
-      // query is still negligible vs any corpus scan
-      q, k = 5, nProbe = 6, rerank = 40)
   }
 
   /** Mean recall of an ANN method vs the exact brute-force top-k, reported

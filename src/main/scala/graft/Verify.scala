@@ -130,11 +130,11 @@ object Verify {
     stage("d3")(VerifyReplay.d3Pairs(docs).toDF("id_a", "id_b", "jaccard"))
     stage("d4")(VerifyReplay.d4Pairs(docs).toDF("id_a", "id_b", "hamming"))
     stage("s2")(VerifyReplay.s2Knn(emb).toDF("query_id", "rank", "neighbor_id", "score"))
-    stage("s3")(VerifyReplay.s3Knn(emb, SparkEntry.ivfModel(spark, sfDir))
+    stage("s3")(VerifyReplay.s3Knn(emb, SparkEntry.ivfModel(spark, sfDir).flatCentroids)
       .toDF("query_id", "rank", "neighbor_id", "score"))
     stage("s6") {
-      val (cs, pq) = SparkEntry.ivfPqModel(spark, sfDir)
-      VerifyReplay.s6Knn(emb, cs, pq).toDF("query_id", "rank", "neighbor_id", "score")
+      val (m, pq) = SparkEntry.ivfPqModel(spark, sfDir)
+      VerifyReplay.s6Knn(emb, m.flatCentroids, pq).toDF("query_id", "rank", "neighbor_id", "score")
     }
     stage("s12") {
       val labels = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -228,10 +228,15 @@ object VerifyReplay {
 
   // ------------------------------------------------------- s3: IVF kNN --
 
-  /** Sequential [[Similarity.ivfIndex]]+[[Similarity.ivfKnnIndexed]] around
-    * the SAME centroid model the staged s3 query uses (the model is a
-    * dataset artifact; this replay pins the distributed cell assignment,
-    * probe join and re-rank). s3 operating point: k=5, nProbe=6.
+  /** Sequential twin of [[Similarity.ivfIndexTwoLevel]] +
+    * [[Similarity.ivfKnnTwoLevelIndexed]] on the flat model
+    * (`IvfTwoLevel.flat`, nProbeSuper=1) around the SAME centroids the
+    * staged s3 query uses (`model.flatCentroids`; the model is a dataset
+    * artifact, and this replay pins the distributed cell assignment, probe
+    * join and re-rank). It stays independent of the kernel's probe rule:
+    * it ranks cells by cosine with a stable sort, where the kernel ranks
+    * by unit-dot with ties to the lower cell. s3 operating point: k=5,
+    * nProbe=6.
     */
   def s3Knn(emb: Seq[(Long, Array[Float])], centroids: Array[Array[Float]],
             k: Int = 5, nProbe: Int = 6): Seq[(Long, Int, Long, Double)] = {
@@ -279,8 +284,10 @@ object VerifyReplay {
 
   // ---------------------------------------------------- s6: IVF-PQ kNN --
 
-  /** Sequential [[Similarity.ivfPqIndex]]+[[Similarity.ivfPqKnnIndexed]]
-    * around the staged query's coarse + PQ models: residual encode, ADC
+  /** Sequential twin of [[Similarity.ivfPqIndexTwoLevel]] +
+    * [[Similarity.ivfPqKnnTwoLevelIndexed]] on the flat model (nProbeSuper=1)
+    * around the staged s6 query's coarse centroids (`model.flatCentroids`)
+    * and PQ model, probing by cosine like [[s3Knn]]: residual encode, ADC
     * scoring with the same LUT/accumulation order, global top-(k·rerank)
     * cut by (approx desc, id asc) — provably what the distributed
     * per-partition heaps + window produce — then exact re-rank. s6

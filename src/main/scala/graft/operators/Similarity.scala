@@ -17,21 +17,28 @@ import graft.pipeline.Rng
   *    bucket; candidates re-ranked by exact cosine. At 100 TB the bucket
   *    join shuffles only (bucket, id, vec-of-candidates), never the full
   *    cross product.
-  *  - IVF (k-means coarse quantizer) ANN: the other standard scale path —
-  *    small deterministic Lloyd on a fixed sample defines centroids,
-  *    corpus vectors are assigned to their nearest cell, queries probe the
-  *    nProbe nearest cells.
+  *  - IVF (k-means coarse quantizer) ANN: the other standard scale path,
+  *    raw (`ivfIndexTwoLevel`) or product-quantized (`ivfPqIndexTwoLevel`).
+  *    There is ONE IVF stack, the two-level one ([[IvfTwoLevel]]): corpus
+  *    vectors are routed to their nearest child cell among the nearest
+  *    super-cells' children, and queries probe the nProbe best cells among
+  *    the nProbeSuper nearest supers. A flat quantizer is the one-super
+  *    case: `IvfTwoLevel.flat(centroids)` wraps the output of the flat
+  *    trainers (`ivfTrain`, driver Lloyd on a seeded sample, and
+  *    `ivfTrainDistributed`, executor-side Lloyd), and the same functions
+  *    index and probe it with `nProbeSuper = 1`.
   *
   * BUILD ONCE, QUERY MANY (the 100 TB contract): both ANN methods are
-  * split into an index-build phase (`lshIndex` / `ivfTrain`+`ivfIndex` —
-  * one pass over the corpus, output a plain DataFrame that callers persist
-  * to parquet) and a query phase (`lshKnnIndexed` / `ivfKnnIndexed`) that
-  * touches only the staged index. A 100 TB corpus gets indexed once and
-  * queried many times — rebuilding buckets per query batch (round 2's
+  * split into an index-build phase (`lshIndex` / a trainer plus
+  * `ivfIndexTwoLevel` — one pass over the corpus, output a plain DataFrame
+  * that callers persist to parquet) and a query phase (`lshKnnIndexed` /
+  * `ivfKnnTwoLevelIndexed`) that touches only the staged index. A 100 TB
+  * corpus gets indexed once and queried many times — rebuilding buckets
+  * per query batch (round 2's
   * shape) re-scans the world every call; the reference makes the same
   * split by compiling its DFA once and reusing it per input
   * (/root/reference/src/dfa/dfa.rs:250-413, lexer.rs:88-122).
-  * `lshKnn` / `ivfKnn` remain as build+query conveniences for one-shot use.
+  * `lshKnn` remains as the build+query convenience for one-shot LSH.
   * Determinism makes the staging sound: the planes/centroids are pure
   * functions of (nBits, nTables, dim, seed) / the corpus sample, so a
   * restarted query job probes a previously staged index correctly.
@@ -300,8 +307,9 @@ object Similarity {
     * to train, independent of id layout, and the sample is still
     * deterministic across runs (same ids → same hashes → same sample), so a
     * restarted build reproduces the same centroids. TakeOrdered, never a
-    * full sort. The returned model is tiny (nCells × dim floats); persist
-    * it with [[centroidsToDf]] next to the [[ivfIndex]] parquet. The
+    * full sort. The returned model is tiny (nCells × dim floats); wrap it
+    * with [[IvfTwoLevel.flat]] and persist that with [[twoLevelToDf]] next
+    * to the [[ivfIndexTwoLevel]] parquet. The
     * reference makes the same whole-population move: its matcher compiles
     * from the entire schema, not a biased corner
     * (/root/reference/src/dfa/dfa.rs:250-413).
@@ -481,66 +489,6 @@ object Similarity {
     } finally if (cacheTraining) training.unpersist(blocking = false)
   }
 
-  /** BUILD phase: assign every corpus vector to its nearest centroid cell —
-    * one pass, broadcast centroids. Output (cell, id, emb) is the
-    * parquet-persistable inverted file; readers prune to the probed cells.
-    * Assignment ranks cells by dot(v, c/|c|) over pre-unitized centroids —
-    * the same ranking as cosine at a third of the flops, with |c| computed
-    * once per broadcast instead of once per (vector, cell): the index build
-    * is the corpus-sized O(n · nCells · dim) pass, exactly where a 3×
-    * matters at 100 TB (and at the 10⁴-cell counts [[ivfTrainDistributed]]
-    * unlocks).
-    */
-  def ivfIndex(corpus: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(unitize(centroids))
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) => (nearestCellDot(emb, bc.value), id, emb) }
-      .toDF("cell", "id", "emb")
-  }
-
-  /** QUERY phase: approximate top-k against a prebuilt [[ivfIndex]] + its
-    * centroid model. Queries probe their nProbe nearest cells; candidates
-    * re-ranked by exact cosine. Corpus touched only through the index.
-    * Probe rows are SLIM (cell, query_id) — embedding the query vector per
-    * probed cell multiplies the broadcast by nProbe copies (the same
-    * payload discipline as [[lshKnnIndexed]]'s probes); the vectors join
-    * back once per matched candidate from the tiny broadcast `qn` side.
-    */
-  def ivfKnnIndexed(index: DataFrame, centroids: Array[Array[Float]], queries: DataFrame,
-                    k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = qn.as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        bc.value.indices.map(c => (c, cos(emb, bc.value(c))))
-          .sortBy(-_._2).take(nProbe)
-          .map { case (c, _) => (c, qid) }
-      }.toDF("cell", "query_id")
-
-    val scored = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-      .groupBy("query_id", "neighbor_id").agg(max("score").as("score"))
-    topK(scored, k)
-  }
-
-  /** One-shot convenience: train + index + query in one call. */
-  def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-             nCells: Int = 16, nProbe: Int = 4, sampleSize: Int = 256,
-             iterations: Int = 5): DataFrame = {
-    val centroids = ivfTrain(corpus, nCells, sampleSize, iterations)
-    ivfKnnIndexed(ivfIndex(corpus, centroids), centroids, queries, k, nProbe)
-  }
-
   // ------------------------------------------------ two-level IVF (10⁵ cells) --
 
   /** Two-level coarse quantizer: `nSuper` super-cells, each with
@@ -554,7 +502,9 @@ object Similarity {
     * approximation: a vector near a super-cell boundary may belong to a
     * child of the OTHER super, so assignment and probing both descend into
     * the `topSuper` nearest supers rather than one (the knob that trades
-    * routing loss for cost — measured in AnnScaleBench).
+    * routing loss for cost — measured in AnnScaleBench). With one super
+    * ([[IvfTwoLevel.flat]]) there is no routing loss: every vector sees
+    * every cell, which is the flat quantizer.
     */
   final case class IvfTwoLevel(superCentroids: Array[Array[Float]],
                                children: Array[Array[Array[Float]]]) extends Serializable {
@@ -570,7 +520,10 @@ object Similarity {
     @transient lazy val flatCentroids: Array[Array[Float]] = children.flatten
 
     /** Flat cell id of v: best child (by unit-dot) among the `topSuper`
-      * nearest supers' children.
+      * nearest supers' children. The nearest super's winner stands unless
+      * another super's winner scores strictly higher, so a vector whose
+      * dots never beat `Double.MinValue` (NaN coordinates) still lands in a
+      * real cell, as [[nearestCellDot]] puts it in cell 0.
       */
     def assign(v: Array[Float], topSuper: Int): Int = {
       val top = topSupers(v, topSuper)
@@ -579,7 +532,7 @@ object Similarity {
       while (i < top.length) {
         val s = top(i)
         val (c, d) = nearestCellDotWithScore(v, childUnit(s))
-        if (d > bestS) { bestS = d; best = s * kChild + c }
+        if (best < 0 || d > bestS) { bestS = d; best = s * kChild + c }
         i += 1
       }
       best
@@ -595,6 +548,36 @@ object Similarity {
         while (j < lim) { d += v(j).toDouble * u(j); j += 1 }
         (s, d)
       }.sortBy(-_._2).take(math.min(n, nSuper)).map(_._1).toArray
+
+    /** The (super, cell) pairs a query probes: the best `nProbe` cells by
+      * unit-dot among the `nProbeSuper` nearest supers' children, ordered
+      * by (−dot, cell), so ties go to the lower cell id.
+      */
+    private[graft] def probeCells(v: Array[Float], nProbe: Int, nProbeSuper: Int): Seq[(Int, Int)] =
+      topSupers(v, nProbeSuper).iterator.flatMap { s =>
+        childUnit(s).indices.iterator.map { c =>
+          val u = childUnit(s)(c); var d = 0.0; var j = 0
+          val lim = math.min(v.length, u.length)
+          while (j < lim) { d += v(j).toDouble * u(j); j += 1 }
+          (s, s * kChild + c, d)
+        }
+      }.toVector
+        .sortBy { case (_, cell, d) => (-d, cell) }.take(nProbe)
+        .map { case (s, cell, _) => (s, cell) }
+  }
+
+  object IvfTwoLevel {
+    /** A flat quantizer as a two-level model: one super-cell (the mean of
+      * `centroids`) whose children are `centroids`, so cell ids are the
+      * centroid indices. Every two-level function indexes and probes it as
+      * the flat IVF; probe it with `nProbeSuper = 1`.
+      */
+    def flat(centroids: Array[Array[Float]]): IvfTwoLevel = {
+      val mean = Array.tabulate(centroids.head.length) { i =>
+        (centroids.iterator.map(_(i).toDouble).sum / centroids.length).toFloat
+      }
+      IvfTwoLevel(Array(mean), Array(centroids))
+    }
   }
 
   /** Driver-side Lloyd under cosine over an in-memory sample — the loop
@@ -718,7 +701,10 @@ object Similarity {
     * `.write.partitionBy("super")` so the probe join's broadcast side
     * partition-prunes the scan to the probed supers (partitioning on the
     * flat cell would create nCells directories — 10⁵ files is a filesystem
-    * antipattern; the super level is the right granularity).
+    * antipattern; the super level is the right granularity). A flat model
+    * ([[IvfTwoLevel.flat]]) has one super, so partitioning on it prunes
+    * nothing: persist a flat index with `.write.partitionBy("cell")` so the
+    * scan prunes to the probed cells.
     *
     * INCREMENTAL APPEND (the daily-growth lifecycle): the same pass over
     * only the NEW vectors, written with `.mode("append")` into the same
@@ -872,17 +858,7 @@ object Similarity {
     // copies of every query vector (same discipline as lshKnnIndexed)
     val probes = qn.as[(Long, Array[Float])]
       .flatMap { case (qid, emb) =>
-        val m = bc.value
-        val scored = m.topSupers(emb, nProbeSuper).iterator.flatMap { s =>
-          m.childUnit(s).indices.iterator.map { c =>
-            val u = m.childUnit(s)(c); var d = 0.0; var j = 0
-            val lim = math.min(emb.length, u.length)
-            while (j < lim) { d += emb(j).toDouble * u(j); j += 1 }
-            (s, s * m.kChild + c, d)
-          }
-        }.toVector
-        scored.sortBy { case (_, cell, d) => (-d, cell) }.take(nProbe)
-          .map { case (s, cell, _) => (s, cell, qid) }
+        bc.value.probeCells(emb, nProbe, nProbeSuper).map { case (s, cell) => (s, cell, qid) }
       }.toDF("super", "cell", "query_id")
 
     val probed = index.join(broadcast(probes), Seq("super", "cell"))
@@ -927,9 +903,10 @@ object Similarity {
       }
       .start()
 
-  /** Two-level model ↔ DataFrame converters (same staged-parquet lifecycle
-    * as [[centroidsToDf]]): child rows are (super, child, centroid), the
-    * super row is (super, -1, centroid).
+  /** Two-level model ↔ DataFrame converters, so a staged IVF index is
+    * fully parquet-persistable: write `twoLevelToDf` next to the index,
+    * read it back with `twoLevelFromDf` before querying. Child rows are
+    * (super, child, centroid), the super row is (super, -1, centroid).
     */
   def twoLevelToDf(spark: SparkSession, m: IvfTwoLevel): DataFrame = {
     import spark.implicits._
@@ -958,15 +935,31 @@ object Similarity {
     * layout a 100 TB vector corpus actually serves batches from.
     */
   def pqTrainTwoLevel(corpus: DataFrame, model: IvfTwoLevel, nSub: Int = 8, k: Int = 16,
-                      sampleSize: Int = 256, iterations: Int = 5, topSuper: Int = 2): PqModel =
-    pqFromResiduals(
-      pqSample(corpus, sampleSize)
-        .map(v => subtractCentroid(v, model.cellCentroid(model.assign(v, topSuper)))),
-      nSub, k, iterations)
+                      sampleSize: Int = 256, iterations: Int = 5, topSuper: Int = 2): PqModel = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    // seeded hash-ordered uniform sample, seed 43: an independent draw from
+    // ivfTrain's 41
+    val sample = corpus.filter(col("embedding").isNotNull)
+      .orderBy(xxhash64(col("vec_id"), lit(43)), col("vec_id")).limit(sampleSize)
+      .select("embedding").as[Array[Float]].collect()
+      .map(v => subtractCentroid(v, model.cellCentroid(model.assign(v, topSuper))))
+    require(k <= 256, s"PQ code must fit one byte: k=$k > 256")
+    require(sample.nonEmpty, "empty corpus")
+    val dim = sample.head.length
+    require(dim % nSub == 0, s"embedding dim $dim not divisible by nSub=$nSub")
+    val subDim = dim / nSub
+    PqModel(Array.tabulate(nSub) { m =>
+      lloydL2(sample.map(v => java.util.Arrays.copyOfRange(v, m * subDim, (m + 1) * subDim)),
+        k, iterations)
+    })
+  }
 
-  /** BUILD: one routed-assignment pass emitting (super, cell, id, codes,
-    * norm) — persist with `.write.partitionBy("super")` like
-    * [[ivfIndexTwoLevel]].
+  /** BUILD: one routed-assignment pass emitting (super, cell, id, codes
+    * BINARY(nSub), norm) — persist with `.write.partitionBy("super")`
+    * (`"cell"` for a flat model) like [[ivfIndexTwoLevel]]. `norm` is the
+    * exact L2 norm, so ADC returns approximate COSINE (approx <q,v> from
+    * codes, exact |q|·|v| from stored norms).
     */
   def ivfPqIndexTwoLevel(corpus: DataFrame, model: IvfTwoLevel, pq: PqModel,
                          topSuper: Int = 2): DataFrame = {
@@ -990,8 +983,7 @@ object Similarity {
     * into the shared ADC scan + exact re-rank ([[adcScanRerank]] — the
     * coarse-term table is the flattened children). Probe rows embed q_emb
     * because the ADC pass builds its LUT in-scan; the broadcast is bounded
-    * by queries × nProbe × dim — fine for the bounded-query-batch contract,
-    * same as the flat PQ path.
+    * by queries × nProbe × dim — fine for the bounded-query-batch contract.
     */
   def ivfPqKnnTwoLevelIndexed(index: DataFrame, model: IvfTwoLevel, pq: PqModel,
                               vectors: DataFrame, queries: DataFrame,
@@ -1023,17 +1015,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val probes = qn.as[(Long, Array[Float])]
       .flatMap { case (qid, emb) =>
-        val m = bcM.value
-        val scored = m.topSupers(emb, nProbeSuper).iterator.flatMap { s =>
-          m.childUnit(s).indices.iterator.map { c =>
-            val u = m.childUnit(s)(c); var d = 0.0; var j = 0
-            val lim = math.min(emb.length, u.length)
-            while (j < lim) { d += emb(j).toDouble * u(j); j += 1 }
-            (s, s * m.kChild + c, d)
-          }
-        }.toVector
-        scored.sortBy { case (_, cell, d) => (-d, cell) }.take(nProbe)
-          .map { case (s, cell, _) => (s, cell, qid, emb) }
+        bcM.value.probeCells(emb, nProbe, nProbeSuper).map { case (s, cell) => (s, cell, qid, emb) }
       }.toDF("super", "cell", "query_id", "q_emb")
 
     val probed = index.join(broadcast(probes), Seq("super", "cell"))
@@ -1047,20 +1029,6 @@ object Similarity {
       .as[(Long, Array[Float], Int, Long, Array[Byte], Float)]
     adcScanRerank(joined, bcFlat, bcP, vectors, qn, k, k * rerank)
   }
-
-  /** Centroid model ↔ DataFrame converters, so a staged IVF index is fully
-    * parquet-persistable: write `centroidsToDf` next to the index, read it
-    * back with `centroidsFromDf` before querying.
-    */
-  def centroidsToDf(spark: SparkSession, centroids: Array[Array[Float]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
-  }
-
-  def centroidsFromDf(df: DataFrame): Array[Array[Float]] =
-    df.select("cell", "centroid").collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray)
 
   // ------------------------------------------------------------- IVF-PQ --
 
@@ -1135,9 +1103,9 @@ object Similarity {
     centroids
   }
 
-  /** v − centroid, the single definition both pqTrain's sample and
-    * ivfPqIndex's codes go through — train/index residual semantics must
-    * never diverge.
+  /** v − centroid, the single definition both pqTrainTwoLevel's sample
+    * and ivfPqIndexTwoLevel's codes go through — train/index residual
+    * semantics must never diverge.
     */
   private[graft] def subtractCentroid(v: Array[Float], c: Array[Float]): Array[Float] = {
     val out = new Array[Float](v.length)
@@ -1146,55 +1114,6 @@ object Similarity {
     while (i < lim) { out(i) = v(i) - c(i); i += 1 }
     while (i < v.length) { out(i) = v(i); i += 1 }
     out
-  }
-
-  /** v − its coarse cell centroid: the quantity the codebooks quantize.
-    * Cell assignment MUST match [[ivfIndex]]/[[ivfPqIndex]]'s (unit-dot) —
-    * train/index residual semantics must never diverge.
-    */
-  private def residual(v: Array[Float], centroids: Array[Array[Float]],
-                       unit: Array[Array[Float]]): Array[Float] =
-    subtractCentroid(v, centroids(nearestCellDot(v, unit)))
-
-  /** TRAIN phase: per-subspace codebooks over RESIDUALS vs the given coarse
-    * centroids, from the same seeded hash-ordered uniform sample
-    * [[ivfTrain]] uses (different seed so the two samples are independent
-    * draws). k ≤ 256 so a code fits one byte.
-    */
-  def pqTrain(corpus: DataFrame, centroids: Array[Array[Float]], nSub: Int = 8, k: Int = 16,
-              sampleSize: Int = 256, iterations: Int = 5): PqModel = {
-    val unit = unitize(centroids)
-    pqFromResiduals(
-      pqSample(corpus, sampleSize).map(v => residual(v, centroids, unit)),
-      nSub, k, iterations)
-  }
-
-  /** The seeded hash-ordered PQ training sample (seed 43 — an independent
-    * draw from ivfTrain's 41), shared by the flat and two-level trainers.
-    */
-  private def pqSample(corpus: DataFrame, sampleSize: Int): Array[Array[Float]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.filter(col("embedding").isNotNull)
-      .orderBy(xxhash64(col("vec_id"), lit(43)), col("vec_id")).limit(sampleSize)
-      .select("embedding").as[Array[Float]].collect()
-  }
-
-  /** Per-subspace Lloyd over an already-residualized sample — the tail both
-    * PQ trainers share (residualization differs: flat nearest-cell vs
-    * two-level routed assignment; it must match the index build's).
-    */
-  private def pqFromResiduals(sample: Array[Array[Float]], nSub: Int, k: Int,
-                              iterations: Int): PqModel = {
-    require(k <= 256, s"PQ code must fit one byte: k=$k > 256")
-    require(sample.nonEmpty, "empty corpus")
-    val dim = sample.head.length
-    require(dim % nSub == 0, s"embedding dim $dim not divisible by nSub=$nSub")
-    val subDim = dim / nSub
-    PqModel(Array.tabulate(nSub) { m =>
-      lloydL2(sample.map(v => java.util.Arrays.copyOfRange(v, m * subDim, (m + 1) * subDim)),
-        k, iterations)
-    })
   }
 
   /** Encode v's RESIDUAL (v must already be residualized by the caller). */
@@ -1234,74 +1153,22 @@ object Similarity {
     lut
   }
 
-  /** BUILD phase: one pass assigning every vector to its coarse cell and
-    * product-quantizing it. Output (cell, id, codes BINARY(nSub), norm) is
-    * the parquet-persistable compressed inverted file; `norm` is the exact
-    * L2 norm so ADC can return approximate COSINE (approx <q,v> from codes,
-    * exact |q|·|v| from stored norms).
-    */
-  def ivfPqIndex(corpus: DataFrame, centroids: Array[Array[Float]], pq: PqModel): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcU = spark.sparkContext.broadcast(unitize(centroids))
-    val bcP = spark.sparkContext.broadcast(pq)
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        // unit-dot assignment, same ranking/flops rationale as ivfIndex
-        val cell = nearestCellDot(emb, bcU.value)
-        val res = subtractCentroid(emb, bcC.value(cell))
-        (cell, id, pqEncode(res, bcP.value), l2norm(emb))
-      }
-      .toDF("cell", "id", "codes", "norm")
-  }
-
-  /** QUERY phase against a prebuilt [[ivfPqIndex]]: probe the nProbe nearest
-    * cells, ADC-score every code row in them, keep the top `k·rerank`
-    * candidates per query, and exact-cosine re-rank those against the
-    * single-copy [[vectorTable]]. Two scale properties:
+  /** The PQ query tail: ADC-score every probed code row, keep the top
+    * `r` = k·rerank candidates per query, and exact-cosine re-rank those
+    * against the single-copy [[vectorTable]]. Two scale properties:
     *
     *  - the scan side reads only (cell, id, codes, norm) — `4·dim/(nSub+4)`×
     *    fewer bytes than scanning raw vectors, with cell pruning on top;
     *  - the candidate cut happens INSIDE the ADC pass (a bounded per-query
     *    heap per partition, the map-side-combine shape), so the only
-    *    exchange carries ≤ partitions × queries × k·rerank slim rows, never
-    *    the probed cells' contents. The union of per-partition top-R sets
+    *    exchange carries ≤ partitions × queries × r slim rows, never the
+    *    probed cells' contents. The union of per-partition top-R sets
     *    always contains the global top-R by (score desc, id asc), so the
     *    final window cut is partition-count-invariant and deterministic.
-    */
-  def ivfPqKnnIndexed(index: DataFrame, centroids: Array[Array[Float]], pq: PqModel,
-                      vectors: DataFrame, queries: DataFrame,
-                      k: Int = 5, nProbe: Int = 4, rerank: Int = 8): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcP = spark.sparkContext.broadcast(pq)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = qn.as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        bcC.value.indices.map(c => (c, cos(emb, bcC.value(c))))
-          .sortBy(-_._2).take(nProbe)
-          .map { case (c, _) => (c, qid, emb) }
-      }.toDF("cell", "query_id", "q_emb")
-
-    val joined = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("q_emb"), col("cell"), col("id"), col("codes"), col("norm"))
-      .as[(Long, Array[Float], Int, Long, Array[Byte], Float)]
-    adcScanRerank(joined, bcC, bcP, vectors, qn, k, k * rerank)
-  }
-
-  /** Shared tail of the flat and two-level PQ query paths: the ADC scan
-    * with in-scan bounded per-query heaps, the partition-count-invariant
-    * global top-R window cut, and the exact re-rank over the broadcast
-    * candidate list. `cents` is indexed by the FLAT cell id the joined rows
-    * carry (for the two-level path: the flattened children), because with
-    * residual codes the reassembled inner product is <q,c_cell> + Σ_m
-    * lut[code_m].
+    *
+    * `cents` is indexed by the flat cell id the joined rows carry (the
+    * model's flattened children), because with residual codes the
+    * reassembled inner product is <q,c_cell> + Σ_m lut[code_m].
     */
   private def adcScanRerank(
       joined: org.apache.spark.sql.Dataset[(Long, Array[Float], Int, Long, Array[Byte], Float)],
@@ -1356,18 +1223,8 @@ object Similarity {
     topK(scored, k)
   }
 
-  /** One-shot convenience: train coarse + PQ, index, query in one call. */
-  def ivfPqKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-               nCells: Int = 16, nProbe: Int = 4, nSub: Int = 8, kCodes: Int = 16,
-               rerank: Int = 8): DataFrame = {
-    val cs = ivfTrain(corpus, nCells)
-    val pq = pqTrain(corpus, cs, nSub, kCodes)
-    ivfPqKnnIndexed(ivfPqIndex(corpus, cs, pq), cs, pq, vectorTable(corpus),
-      queries, k, nProbe, rerank)
-  }
-
   /** PQ model ↔ DataFrame converters (parquet-persistable next to the
-    * index + centroids, same lifecycle as [[centroidsToDf]]).
+    * index + model, same lifecycle as [[twoLevelToDf]]).
     */
   def pqModelToDf(spark: SparkSession, pq: PqModel): DataFrame = {
     import spark.implicits._

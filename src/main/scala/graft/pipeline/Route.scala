@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 /** P4 — route / fan-out stage: ONE pass over the parsed+enriched rows,
   * written with `partitionBy("category")` into the four per-category sinks

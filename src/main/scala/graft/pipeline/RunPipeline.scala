@@ -6,8 +6,8 @@ import graft.lexer.PatternBank
 import graft.schema.SchemaConfig
 
 /** End-to-end job: scan → parse → enrich → route (4 sinks) → aggregates,
-  * with checkpoint/resume and metrics accumulators. `main` is the
-  * spark-submit entry used by the scaling benchmark:
+  * with checkpoint/resume. `main` is the spark-submit entry used by the
+  * scaling benchmark:
   *
   *   RunPipeline <nConvs> <outDir> [cores] [schemaYamlPath]
   */
@@ -45,8 +45,10 @@ object RunPipeline {
 
   /** Run the full pipeline over an input Dataset[Turn]. Sinks land in
     * `outDir/<category>`; committed sinks are skipped on resume.
-    */
-  /** @param sinkMode "parquet" (real partitioned sinks) or "noop" (full
+    * `Result.turnsIn` is the routed pass's row count, 0 when no sink was
+    * pending.
+    *
+    * @param sinkMode "parquet" (real partitioned sinks) or "noop" (full
     *   computation — shuffle, parse, enrich, row materialization — into
     *   Spark's noop writer; exact per-sink counts still come from the same
     *   pass via `observe`). noop is the disk-independent configuration the
@@ -58,16 +60,12 @@ object RunPipeline {
           schema: SchemaConfig = SchemaConfig.example,
           fingerprint: String = "",
           sinkMode: String = "parquet"): Result = {
-    val sc = spark.sparkContext
     // The compiled bank rides inside ParseTurnExpression in the plan; Spark
     // broadcasts the serialized task binary once per stage, so the dense DFA
     // tables still ship O(stages), not O(tasks) — no separate
     // sparkContext.broadcast needed on the expression path (the typed oracle
     // path in Parse.apply keeps one).
     val bank = PatternBank.compile(schema)
-
-    val turnsIn = sc.longAccumulator("turns_in")
-    val counters = Category.All.map(c => c -> sc.longAccumulator(s"rows_routed_$c")).toMap
 
     import spark.implicits._
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -81,6 +79,7 @@ object RunPipeline {
 
     val t0 = System.nanoTime()
     var observedCounts = Map.empty[String, Long]
+    var turnsIn = 0L
     if (pending.nonEmpty) {
       // ONE pass: salted repartition of the RAW turns (cheap representation
       // through the shuffle), expression-based parse after placement is
@@ -104,13 +103,11 @@ object RunPipeline {
         Route.writePartitioned(observed, outDir, pending)
 
       val metrics = obs.get
-      turnsIn.add(metrics.get("_turns_in").map(_.asInstanceOf[Long]).getOrElse(0L))
+      turnsIn = metrics.get("_turns_in").map(_.asInstanceOf[Long]).getOrElse(0L)
       observedCounts = Category.All.map(c =>
         c -> metrics.get(c).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
       pending.foreach { c =>
-        val n = observedCounts.getOrElse(c, 0L)
-        counters.get(c).foreach(_.add(n))
-        if (sinkMode != "noop") ckpt.commitSink(c, n)
+        if (sinkMode != "noop") ckpt.commitSink(c, observedCounts.getOrElse(c, 0L))
       }
     }
     val routeSecs = (System.nanoTime() - t0) / 1e9
@@ -133,7 +130,7 @@ object RunPipeline {
     val nt = perTool.count()
     val nc = perConv.count()
     val aggSecs = (System.nanoTime() - ta) / 1e9
-    Result(routedCounts, perTool, perConv, nt, nc, turnsIn.value, routeSecs, aggSecs)
+    Result(routedCounts, perTool, perConv, nt, nc, turnsIn, routeSecs, aggSecs)
   }
 
   /** Stage the synthetic transcript table as parquet (the "Iceberg table"

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -35,6 +35,25 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       docs.filter(col("doc_id") % 7 === 0).withColumn("doc_id", col("doc_id") + 200000L)
         .withColumn("text", regexp_replace(col("text"), "table", "tables"))
     )
+  }
+
+  /** One-shot flat IVF through the two-level kernels: a driver-trained
+    * flat quantizer wrapped by `IvfTwoLevel.flat`, indexed and probed with
+    * one super.
+    */
+  private def flatIvfKnn(corpus: DataFrame, q: DataFrame, nCells: Int, nProbe: Int): DataFrame = {
+    val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(corpus, nCells))
+    Similarity.ivfKnnTwoLevelIndexed(Similarity.ivfIndexTwoLevel(corpus, m), m, q,
+      k = 5, nProbe = nProbe, nProbeSuper = 1)
+  }
+
+  /** One-shot flat IVF-PQ (16 cells, nSub=8, 16 codes) the same way. */
+  private def flatIvfPqKnn(corpus: DataFrame, q: DataFrame, nProbe: Int,
+                           rerank: Int = 8): DataFrame = {
+    val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(corpus, nCells = 16))
+    val pq = Similarity.pqTrainTwoLevel(corpus, m, nSub = 8, k = 16)
+    Similarity.ivfPqKnnTwoLevelIndexed(Similarity.ivfPqIndexTwoLevel(corpus, m, pq), m, pq,
+      Similarity.vectorTable(corpus), q, k = 5, nProbe = nProbe, nProbeSuper = 1, rerank = rerank)
   }
 
   test("exact dedup matches a driver-side group-by-text oracle") {
@@ -249,8 +268,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0) // one probe per cluster block
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val cs = Similarity.ivfTrain(corr, nCells = 8)
-    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, cs), cs, q, k = 5, nProbe = 2)
+    val got = flatIvfKnn(corr, q, nCells = 8, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"IVF recall on cluster-correlated ids = $recall")
@@ -260,9 +278,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceKnn(emb, queries, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf1 = Similarity.ivfKnn(emb, queries, k = 5, nCells = 16, nProbe = 6).collect()
+    val ivf1 = flatIvfKnn(emb, queries, nCells = 16, nProbe = 6).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf2 = Similarity.ivfKnn(emb, queries, k = 5, nCells = 16, nProbe = 6).collect()
+    val ivf2 = flatIvfKnn(emb, queries, nCells = 16, nProbe = 6).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(ivf1 == ivf2, "IVF knn must be deterministic")
     val recall = ivf1.intersect(brute).size.toDouble / brute.size
@@ -342,7 +360,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, cs3), cs3, q, k = 5, nProbe = 2)
+    val m3 = Similarity.IvfTwoLevel.flat(cs3)
+    val got = Similarity.ivfKnnTwoLevelIndexed(Similarity.ivfIndexTwoLevel(corr, m3), m3, q,
+      k = 5, nProbe = 2, nProbeSuper = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"distributed-trainer IVF recall = $recall")
@@ -362,7 +382,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, a), a, q, k = 5, nProbe = 2)
+    val ma = Similarity.IvfTwoLevel.flat(a)
+    val got = Similarity.ivfKnnTwoLevelIndexed(Similarity.ivfIndexTwoLevel(corr, ma), ma, q,
+      k = 5, nProbe = 2, nProbeSuper = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"half-slice distributed-trainer recall = $recall")
@@ -627,40 +649,52 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(lshStaged.nonEmpty)
 
       val cs = Similarity.ivfTrain(emb, nCells = 16)
-      // the shipped layout partitions on cell: the probe join's broadcast
-      // side must dynamically prune the index scan to the probed cells
-      Similarity.ivfIndex(emb, cs).write.partitionBy("cell").parquet(s"$stage/ivf")
-      Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
-      val csBack = Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids"))
-      assert(csBack.map(_.toSeq).toSeq == cs.map(_.toSeq).toSeq)
-      val ivfStagedDf = Similarity.ivfKnnIndexed(
-        spark.read.parquet(s"$stage/ivf"), csBack, q, k = 5, nProbe = 6)
+      val m = Similarity.IvfTwoLevel.flat(cs)
+      // the shipped flat layout partitions on cell: the probe join's
+      // broadcast side must dynamically prune the index scan to the probed
+      // cells
+      Similarity.ivfIndexTwoLevel(emb, m).write.partitionBy("cell").parquet(s"$stage/ivf")
+      Similarity.twoLevelToDf(spark, m).write.parquet(s"$stage/model")
+      val mBack = Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model"))
+      assert(mBack.flatCentroids.map(_.toSeq).toSeq == cs.map(_.toSeq).toSeq)
+      val ivfStagedDf = Similarity.ivfKnnTwoLevelIndexed(
+        spark.read.parquet(s"$stage/ivf"), mBack, q, k = 5, nProbe = 6, nProbeSuper = 1)
       assert(ivfStagedDf.queryExecution.executedPlan.toString.toLowerCase
         .contains("dynamicpruning"))
       val ivfStaged = rows(ivfStagedDf)
-      assert(ivfStaged == rows(Similarity.ivfKnn(emb, q, k = 5, nCells = 16, nProbe = 6)))
+      assert(ivfStaged == rows(flatIvfKnn(emb, q, nCells = 16, nProbe = 6)))
       assert(ivfStaged.nonEmpty)
     } finally graft.pipeline.Staging.deleteRecursively(stage)
+  }
+
+  test("flat IVF model survives the twoLevelToDf → twoLevelFromDf round trip exactly") {
+    val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(emb, nCells = 16))
+    val back = Similarity.twoLevelFromDf(Similarity.twoLevelToDf(spark, m))
+    def same(a: Array[Array[Float]], b: Array[Array[Float]]): Boolean =
+      a.length == b.length && a.zip(b).forall { case (x, y) => java.util.Arrays.equals(x, y) }
+    assert(back.nSuper == 1 && back.nCells == m.nCells)
+    assert(same(back.superCentroids, m.superCentroids))
+    assert(same(back.flatCentroids, m.flatCentroids))
   }
 
   test("IVF-PQ: codes are one byte per subspace, ADC recall high, deterministic") {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceKnn(emb, queries, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val cs = Similarity.ivfTrain(emb, nCells = 16)
-    val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
+    val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(emb, nCells = 16))
+    val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 8, k = 16)
     assert(pq.nSub == 8 && pq.k == 16 && pq.dim == 64)
     // every code byte indexes a real sub-centroid
-    val idx = Similarity.ivfPqIndex(emb, cs, pq)
-    assert(idx.columns.toSet == Set("cell", "id", "codes", "norm"))
+    val idx = Similarity.ivfPqIndexTwoLevel(emb, m, pq)
+    assert(idx.columns.toSet == Set("super", "cell", "id", "codes", "norm"))
     val badCodes = idx.collect().count { r =>
       val codes = r.getAs[Array[Byte]]("codes")
       codes.length != 8 || codes.exists(b => (b & 0xFF) >= 16)
     }
     assert(badCodes == 0)
-    val got1 = Similarity.ivfPqKnn(emb, queries, k = 5, nCells = 16, nProbe = 6, rerank = 16)
+    val got1 = flatIvfPqKnn(emb, queries, nProbe = 6, rerank = 16)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got2 = Similarity.ivfPqKnn(emb, queries, k = 5, nCells = 16, nProbe = 6, rerank = 16)
+    val got2 = flatIvfPqKnn(emb, queries, nProbe = 6, rerank = 16)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(got1 == got2, "IVF-PQ knn must be deterministic")
     val recall = got1.intersect(brute).size.toDouble / brute.size
@@ -673,25 +707,25 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val q = emb.filter(col("vec_id") < 10)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-      val cs = Similarity.ivfTrain(emb, nCells = 16)
-      val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
+      val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(emb, nCells = 16))
+      val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 8, k = 16)
       // shipped layout: cell-partitioned codes, bucket-partitioned vectors —
       // both scans must be dynamically pruned (probed cells / candidates)
-      Similarity.ivfPqIndex(emb, cs, pq).write.partitionBy("cell").parquet(s"$stage/ivfpq")
-      Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
+      Similarity.ivfPqIndexTwoLevel(emb, m, pq).write.partitionBy("cell").parquet(s"$stage/ivfpq")
+      Similarity.twoLevelToDf(spark, m).write.parquet(s"$stage/model")
       Similarity.pqModelToDf(spark, pq).write.parquet(s"$stage/pqmodel")
       Similarity.vectorTableBucketed(emb).write.partitionBy("id_bucket").parquet(s"$stage/vectors")
       val pqBack = Similarity.pqModelFromDf(spark.read.parquet(s"$stage/pqmodel"))
       assert(pqBack.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
         pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-      val stagedDf = Similarity.ivfPqKnnIndexed(
+      val stagedDf = Similarity.ivfPqKnnTwoLevelIndexed(
         spark.read.parquet(s"$stage/ivfpq"),
-        Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids")),
-        pqBack, spark.read.parquet(s"$stage/vectors"), q, k = 5, nProbe = 6)
+        Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model")),
+        pqBack, spark.read.parquet(s"$stage/vectors"), q, k = 5, nProbe = 6, nProbeSuper = 1)
       val planStr = stagedDf.queryExecution.executedPlan.toString.toLowerCase
       assert(planStr.contains("dynamicpruning"))
       val staged = rows(stagedDf)
-      assert(staged == rows(Similarity.ivfPqKnn(emb, q, k = 5, nCells = 16, nProbe = 6)))
+      assert(staged == rows(flatIvfPqKnn(emb, q, nProbe = 6)))
       assert(staged.nonEmpty)
     } finally graft.pipeline.Staging.deleteRecursively(stage)
   }
@@ -723,15 +757,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must produce identical top-k: the union of per-partition top-R heaps
     // always contains the global top-R by (score desc, id asc)
     val q = emb.filter(col("vec_id") < 10)
-    val cs = Similarity.ivfTrain(emb, nCells = 16)
-    val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
-    val idx = Similarity.ivfPqIndex(emb, cs, pq)
+    val m = Similarity.IvfTwoLevel.flat(Similarity.ivfTrain(emb, nCells = 16))
+    val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 8, k = 16)
+    val idx = Similarity.ivfPqIndexTwoLevel(emb, m, pq)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val one = rows(Similarity.ivfPqKnnIndexed(idx.repartition(1), cs, pq,
-      Similarity.vectorTable(emb), q, k = 5, nProbe = 6))
-    val many = rows(Similarity.ivfPqKnnIndexed(idx.repartition(13), cs, pq,
-      Similarity.vectorTable(emb), q, k = 5, nProbe = 6))
+    val one = rows(Similarity.ivfPqKnnTwoLevelIndexed(idx.repartition(1), m, pq,
+      Similarity.vectorTable(emb), q, k = 5, nProbe = 6, nProbeSuper = 1))
+    val many = rows(Similarity.ivfPqKnnTwoLevelIndexed(idx.repartition(13), m, pq,
+      Similarity.vectorTable(emb), q, k = 5, nProbe = 6, nProbeSuper = 1))
     assert(one == many)
     assert(one.nonEmpty)
   }
